@@ -260,34 +260,62 @@ def stage_move(staging_dir: str, data_dir: str) -> list[str]:
     return out
 
 
-#: Driver-side staging gate (r12): a store's micro-commit delta is
-#: KB-scale, but a Spark parquet write job costs a fixed ~0.3-0.9 s
-#: (task launch + committer + staging move) regardless of size. A
-#: frame at or below this row count (probed with a bounded LIMIT
-#: collect — one cheap job) is written by the DRIVER through pyarrow:
-#: same directory layout, same invisibility-until-commit, same zone
-#: maps; row order follows the collected partition order, so
-#: sortWithinPartitions/repartitionByRange shaping survives. Larger
-#: frames (or non-integer partition values, which need Hive path
-#: escaping) keep the cluster write path unchanged.
-STAGE_DRIVER_ROWS = int(os.environ.get("SPARK_GRAFT_STAGE_DRIVER_ROWS", "65536"))
-#: Byte backstop for the probe (guards wide binary/vector rows).
-STAGE_DRIVER_BYTES = int(
-    os.environ.get("SPARK_GRAFT_STAGE_DRIVER_BYTES", str(128 * 1024 * 1024))
-)
+#: Placement: where a commit's work runs. Every driver fast path —
+#: ingest's decode and chain sort, upsert's collision checks and
+#: staging, stage_df's writes, the control pass — is gated by the caps
+#: below, and they are the only gates. A micro-batch commit is
+#: fixed-cost bound: each Spark job it launches (task launch, parquet
+#: committer, staging move) costs ~0.3-0.9 s for KB of data, so a frame
+#: that fits the in-memory cap is collected once by `probe_arrow` and
+#: processed by the driver through pyarrow — same files, layout, zone
+#: maps and CAS commit, minus the per-step jobs. Anything larger
+#: (backfills, compactions, a store grown past the merge cap) runs on
+#: the cluster, and a driver path that meets a shape it cannot handle
+#: falls back to the cluster by re-reading through Spark.
+#:
+#: - DRIVER_ROWS = 65,536 rows: well above a streaming micro-batch
+#:   (hundreds to thousands of records) and below a backfill commit
+#:   (tens of thousands of rows and up); the probe's LIMIT cap+1
+#:   bounds what the driver ever collects.
+#: - DRIVER_BYTES = 128 MiB of collected Arrow bytes: the backstop for
+#:   wide binary rows (raw_data, payload, vectors) under the row cap.
+#: - DRIVER_MERGE_BYTES = 32 MiB of committed parquet on disk: the most
+#:   a driver-side collision check, bucket merge or control pass reads
+#:   through pyarrow — a quarter of DRIVER_BYTES, leaving room for
+#:   parquet's expansion once decoded.
+#:
+#: A test forces the cluster path by patching DRIVER_ROWS to 0 (every
+#: non-empty frame then fails the probe) and DRIVER_MERGE_BYTES to 0
+#: (every committed file then exceeds the merge cap).
+DRIVER_ROWS = 65_536
+DRIVER_BYTES = 128 * 1024 * 1024
+DRIVER_MERGE_BYTES = 32 * 1024 * 1024
+
+
+def probe_arrow(df):
+    """The bounded driver-placement probe: collect at most
+    DRIVER_ROWS + 1 rows of `df` to an Arrow table. Returns the table,
+    or None when the frame is over either in-memory cap and the
+    cluster path must run."""
+    tbl = df.limit(DRIVER_ROWS + 1).toArrow()
+    if tbl.num_rows > DRIVER_ROWS or tbl.nbytes > DRIVER_BYTES:
+        return None
+    return tbl
 
 
 def _stage_df_driver(
     df, base: str, data_name: str, partition_by: str | None
 ) -> list[str] | None:
-    """Bounded-probe driver-side staging; None → caller takes the
-    Spark write path (too big, or a shape pyarrow should not guess
-    at). Writes one file per (upstream Spark partition, partition_by
-    value) — the SAME file granularity as the cluster write — so
-    range-clustered multi-file layouts (postings/zorder/obj_key
-    slicing) keep their per-file disjoint zones and the read-side
-    skipping they exist for. spark_partition_id() rides the collected
-    rows to recover the boundaries."""
+    """Driver-side staging of a frame that passes `probe_arrow`; None
+    → caller takes the Spark write path (too big, or a shape pyarrow
+    should not guess at). Writes one file per (upstream Spark
+    partition, partition_by value) — the SAME file granularity as the
+    cluster write — so range-clustered multi-file layouts
+    (postings/zorder/obj_key slicing) keep their per-file disjoint
+    zones and the read-side skipping they exist for; row order follows
+    the collected partition order, so sortWithinPartitions shaping
+    survives. spark_partition_id() rides the collected rows to recover
+    the boundaries."""
     from pyspark.sql import functions as F
 
     import pyarrow.compute as pc
@@ -295,14 +323,10 @@ def _stage_df_driver(
 
     pid = "__stage_pid"
     try:
-        tbl = (
-            df.withColumn(pid, F.spark_partition_id())
-            .limit(STAGE_DRIVER_ROWS + 1)
-            .toArrow()
-        )
+        tbl = probe_arrow(df.withColumn(pid, F.spark_partition_id()))
     except Exception:
         return None  # non-Arrow-convertible type: cluster path
-    if tbl.num_rows > STAGE_DRIVER_ROWS or tbl.nbytes > STAGE_DRIVER_BYTES:
+    if tbl is None:
         return None
     if tbl.num_rows == 0 and partition_by:
         return []  # partitioned Spark write of an empty frame: no files
@@ -344,7 +368,7 @@ def stage_df(df, base: str, data_name: str, partition_by: str | None = None) -> 
     """Write a DataFrame to a staging dir, move its files (uniquely
     renamed, partition subdirs preserved) into base/data_name, return
     their manifest relpaths. Invisible until a commit lists them.
-    KB-scale frames stage driver-side (see STAGE_DRIVER_ROWS)."""
+    Frames that pass `probe_arrow` stage driver-side."""
     import shutil
 
     rels = _stage_df_driver(df, base, data_name, partition_by)

@@ -556,36 +556,6 @@ def _objidx_pending(snap_or_m: dict) -> list[str]:
     )
 
 
-#: Driver-side staging gate (r12, guide §1.2/§6): a micro-batch commit
-#: is FIXED-COST bound, not compute bound — each tiny staging write
-#: pays a full Spark job (task launch + parquet committer + staging
-#: move), ~0.3-0.9 s for KB of data, and the r11 profile showed the
-#: 3-table commit spending most of its wall in exactly those jobs. A
-#: batch at or below this row count is therefore collected ONCE to an
-#: Arrow table (one lightweight collect job — and none at all for
-#: driver-local relations) and staged by the DRIVER through pyarrow:
-#: same files, same layout (bucket partition dirs, records obj_key
-#: clustering + in-file sort, sidecar delta), same zone-map stats,
-#: same CAS commit — minus every per-table Spark write job. Batches
-#: above the gate keep the cluster write path unchanged, so the gate
-#: is scale-adaptive: a 100 TB deployment's KB-scale trickle commits
-#: take the driver path while backfills use the cluster. Collision
-#: checks/merges only stay driver-side while the touched file bytes
-#: are under DRIVER_MERGE_BYTES; otherwise the table falls back to
-#: the Spark path mid-flight (the Arrow batch converts back losslessly).
-DRIVER_STAGE_ROWS = int(os.environ.get("SPARK_GRAFT_DRIVER_STAGE_ROWS", "65536"))
-#: Byte backstop for the bounded probe-collect of stats-less batches:
-#: a probe whose Arrow payload exceeds 8x this falls back to the
-#: cluster path even under the row cap (guards wide binary rows).
-DRIVER_STAGE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_DRIVER_STAGE_BYTES", str(16 * 1024 * 1024))
-)
-#: On-disk byte cap for driver-side collision checks / bucket merges.
-DRIVER_MERGE_BYTES = int(
-    os.environ.get("SPARK_GRAFT_DRIVER_MERGE_BYTES", str(32 * 1024 * 1024))
-)
-
-
 def _bucket_of(pn: int) -> int:
     """Driver-side twin of with_bucket's (pulse/N) cast-to-long —
     truncation toward zero, exactly like Spark's double→long cast."""
@@ -628,41 +598,11 @@ def _arrow_schema(name: str):
     )
 
 
-#: Sentinel: the bounded collect found more rows than the cap — the
-#: batch is not driver-stageable; take the cluster path.
-_TOO_BIG = object()
-
-
-def _collect_arrow(batch: DataFrame, name: str, cap: int | None = None):
-    """Collect one table's batch to an Arrow table in the pinned
-    column order/types, dedup by PK (keep-first — upsert's in-batch
-    winner is unspecified), and append the pulse_bucket column.
-    Returns the prepped table, None for an empty batch, or _TOO_BIG
-    when `cap` is given and the batch exceeds it (the LIMIT bounds
-    what the driver ever holds, so probing an unknown-size batch is
-    safe — and the probe job replaces the planning job the cluster
-    path would have paid anyway)."""
-    import pyarrow as pa
-
-    cols = [f.name for f in TABLE_SCHEMAS[name].fields]
-    src = batch.select(*cols)
-    if cap is not None:
-        src = src.limit(cap + 1)
-    tbl = src.toArrow().cast(_arrow_schema(name))
-    if cap is not None and (
-        tbl.num_rows > cap or tbl.nbytes > 8 * DRIVER_STAGE_BYTES
-    ):
-        return _TOO_BIG
-    return _prep_arrow_table(tbl, name)
-
-
 def _prep_arrow_table(tbl, name: str):
     """Prep one already-collected Arrow batch for driver staging:
     dedup by PK (keep-first — upsert's in-batch winner is
     unspecified) and append the pulse_bucket column. Returns None for
-    an empty batch. Shared by _collect_arrow and callers that hand
-    upsert_many a pyarrow.Table directly (the driver-side ingest
-    fast path)."""
+    an empty batch."""
     import pyarrow as pa
 
     if tbl.num_rows == 0:
@@ -793,6 +733,46 @@ def _read_rels_arrow(base: str, name: str, rels: list[str]):
     return pa.concat_tables(parts)
 
 
+def _with_objidx(snap, name, rels, staged, fams, n_rows, stage_delta):
+    """The records table's object-index upkeep for one commit, shared
+    by both placements: index the batch inline, or defer it
+    (skip-or-batch, see OBJIDX_INLINE_ROWS). `rels` is the snapshot's
+    records list and `fams` the commit's family updates. Returns
+    (staged, fams, pending) where pending is the complete new
+    objidx_pending list; `stage_delta()` writes the batch's sidecar
+    delta and returns its relpaths, and runs only when indexing
+    inline. Other tables pass through with no pending list.
+
+    Pending bookkeeping must survive the merge-rewrite path: a pending
+    file whose bucket gets rewritten RELOCATES its not-yet-indexed
+    rows into this commit's output files, so those outputs join
+    pending whatever else happens — dropping the dangling rel alone
+    would silently lose the relocated pairs from lifeline probes."""
+    if name != "records":
+        return staged, fams, []
+    live = set(fams[name])
+    before = set(rels)
+    new_data = [r for r in fams[name] if r not in before]
+    old_pending = _objidx_pending(snap)
+    carried = [r for r in old_pending if r in live]
+    relocated = any(r not in live for r in old_pending)
+    if (
+        rels  # a fresh store's first commit always indexes inline
+        and n_rows < OBJIDX_INLINE_ROWS
+        and len(carried) + len(new_data) <= OBJIDX_PENDING_MAX
+    ):
+        # skip path: this commit's data files carry their own
+        # (and any relocated) unindexed pairs
+        return staged, fams, carried + new_data
+    irels = stage_delta()
+    fams[OBJIDX] = snap["families"].get(OBJIDX, []) + irels
+    # inline path: the delta covers the BATCH pairs only (kept rows'
+    # pairs are already indexed — a rewrite never changes a row's
+    # bucket); relocated old-pending rows still need their new files
+    # probed
+    return staged + irels, fams, carried + (new_data if relocated else [])
+
+
 def _plan_and_stage_arrow(
     base: str,
     snap: dict,
@@ -803,12 +783,15 @@ def _plan_and_stage_arrow(
 ) -> tuple[list[str], dict[str, list[str]], list[str]] | None:
     """Driver-side twin of _plan_and_stage for an Arrow-collected
     batch under key→bucket affinity. Returns None when the touched
-    file bytes exceed DRIVER_MERGE_BYTES — the caller then reruns the
+    file bytes exceed Mf.DRIVER_MERGE_BYTES — the caller then reruns the
     table through the Spark path (lossless: the Arrow batch converts
     back). Identical decision structure: zone-pruned collision check,
     append-only fast path, bucket merge-rewrite, sidecar delta or
     skip-or-batch defer."""
+    import uuid
+
     import pyarrow as pa
+    import pyarrow.parquet as papq
 
     keys = TABLE_KEYS[name]
     rels = snap["families"].get(name, [])
@@ -822,14 +805,14 @@ def _plan_and_stage_arrow(
     batch_keys = _arrow_keys(tbl, keys) if cand else None
     collide = False
     if cand:
-        if _rels_bytes(base, cand) > DRIVER_MERGE_BYTES:
+        if _rels_bytes(base, cand) > Mf.DRIVER_MERGE_BYTES:
             return None
         collide = bool(_file_keys(base, cand, keys) & batch_keys)
     if not collide:
         new_rels = _stage_arrow(tbl, base, name)
         fams = {name: rels + new_rels}
     else:
-        if _rels_bytes(base, touched) > DRIVER_MERGE_BYTES:
+        if _rels_bytes(base, touched) > Mf.DRIVER_MERGE_BYTES:
             return None
         existing = _read_rels_arrow(base, name, touched)
         kcols = [existing.column(k).to_pylist() for k in keys]
@@ -841,54 +824,29 @@ def _plan_and_stage_arrow(
             name: [r for r in rels if r not in set(touched)] + new_rels
         }
 
-    if name != "records":
-        return new_rels, fams, []
+    def stage_delta():
+        refs = tbl.column("object_reference").to_pylist()
+        bks = tbl.column("pulse_bucket").to_pylist()
+        pairs = sorted(
+            {
+                (obj_key_py(r) if r is not None else None, b)
+                for r, b in zip(refs, bks)
+            },
+            key=lambda p: (p[0] is not None, p[0] or 0, p[1]),
+        )
+        sidecar = pa.table(
+            {
+                OBJ_KEY: pa.array([p[0] for p in pairs], type=pa.int64()),
+                "pulse_bucket": pa.array([p[1] for p in pairs], type=pa.int64()),
+            }
+        )
+        d = os.path.join(base, OBJIDX)
+        os.makedirs(d, exist_ok=True)
+        fn = f"part-{uuid.uuid4().hex}.parquet"
+        papq.write_table(sidecar, os.path.join(d, fn), compression="snappy")
+        return [os.path.join(OBJIDX, fn)]
 
-    # sidecar bookkeeping — mirrors _with_objidx exactly
-    staged = list(new_rels)
-    live = set(fams[name])
-    new_data = [r for r in fams[name] if r not in set(rels)]
-    old_pending = _objidx_pending(snap)
-    carried = [r for r in old_pending if r in live]
-    relocated = any(r not in live for r in old_pending)
-    first_commit = not rels
-    n_rows = tbl.num_rows
-    if (
-        not first_commit
-        and n_rows < OBJIDX_INLINE_ROWS
-        and len(carried) + len(new_data) <= OBJIDX_PENDING_MAX
-    ):
-        return staged, fams, carried + new_data
-    refs = tbl.column("object_reference").to_pylist()
-    bks = tbl.column("pulse_bucket").to_pylist()
-    pairs = sorted(
-        {
-            (obj_key_py(r) if r is not None else None, b)
-            for r, b in zip(refs, bks)
-        },
-        key=lambda p: (p[0] is not None, p[0] or 0, p[1]),
-    )
-    import uuid
-
-    import pyarrow.parquet as papq
-
-    sidecar = pa.table(
-        {
-            OBJ_KEY: pa.array([p[0] for p in pairs], type=pa.int64()),
-            "pulse_bucket": pa.array([p[1] for p in pairs], type=pa.int64()),
-        }
-    )
-    d = os.path.join(base, OBJIDX)
-    os.makedirs(d, exist_ok=True)
-    fn = f"part-{uuid.uuid4().hex}.parquet"
-    papq.write_table(sidecar, os.path.join(d, fn), compression="snappy")
-    irels = [os.path.join(OBJIDX, fn)]
-    fams[OBJIDX] = snap["families"].get(OBJIDX, []) + irels
-    # inline delta covers the BATCH pairs only (kept rows' pairs are
-    # already indexed — a rewrite never changes a row's bucket);
-    # relocated old-pending rows still need their new files probed
-    pending = carried + (new_data if relocated else [])
-    return staged + irels, fams, pending
+    return _with_objidx(snap, name, rels, new_rels, fams, tbl.num_rows, stage_delta)
 
 
 class BatchStats:
@@ -929,28 +887,29 @@ def _validate_batch_stats(
     declared bucket, and — on the append fast path, where staged files
     hold batch rows only — its pulse range must lie within the
     declared bounds. Raises ValueError on violation BEFORE the commit,
-    so a bad hint can never publish. Pinned by
-    test_driver_stage::test_understated_batch_stats_refused."""
+    after discarding this table's staged files, so a bad hint can
+    never publish nor leave orphans. Pinned by
+    test_driver_stage::test_understated_batch_stats_refused_before_commit."""
     allowed = set(buckets)
-    for r in new_rels:
-        b = _rel_bucket(r)
-        if b is not None and b not in allowed:
-            raise ValueError(
-                f"{name}: staged file {r} lands in bucket {b}, outside the "
-                f"declared BatchStats buckets {sorted(allowed)} — the "
-                "declared pulse set must be exact (see BatchStats)"
-            )
-    if pulse_bounds is None:
-        return
-    lo, hi = pulse_bounds
-    for r, cols in Mf.file_stats(base, new_rels, ["pulse_number"]).items():
-        zone = cols.get("pulse_number")
-        if zone and (zone[0] < lo or zone[1] > hi):
-            raise ValueError(
-                f"{name}: staged file {r} holds pulses {zone}, outside the "
-                f"declared BatchStats bounds [{lo}, {hi}] — the declared "
-                "pulse set must be exact (see BatchStats)"
-            )
+    problems = [
+        f"{name}: staged file {r} lands in bucket {b}, outside the "
+        f"declared BatchStats buckets {sorted(allowed)}"
+        for r in new_rels
+        if (b := _rel_bucket(r)) is not None and b not in allowed
+    ]
+    if pulse_bounds is not None:
+        lo, hi = pulse_bounds
+        problems += [
+            f"{name}: staged file {r} holds pulses {zone}, outside the "
+            f"declared BatchStats bounds [{lo}, {hi}]"
+            for r, cols in Mf.file_stats(base, new_rels, ["pulse_number"]).items()
+            if (zone := cols.get("pulse_number")) and (zone[0] < lo or zone[1] > hi)
+        ]
+    if problems:
+        Mf.discard(base, new_rels)
+        raise ValueError(
+            f"{problems[0]} — the declared pulse set must be exact (see BatchStats)"
+        )
 
 
 def _plan_and_stage(
@@ -975,30 +934,7 @@ def _plan_and_stage(
     keys = TABLE_KEYS[name]
     rels = snap["families"].get(name, [])
 
-    def _with_objidx(staged, fams):
-        """Returns (staged, fams, new_complete_pending). Pending
-        bookkeeping must survive the merge-rewrite path: a pending
-        file whose bucket gets rewritten RELOCATES its not-yet-indexed
-        rows into this commit's output files, so those outputs join
-        pending whatever else happens — dropping the dangling rel
-        alone would silently lose the relocated pairs from lifeline
-        probes."""
-        if name != "records":
-            return staged, fams, []
-        live = set(fams[name])
-        new_data = [r for r in fams[name] if r not in set(rels)]
-        old_pending = _objidx_pending(snap)
-        carried = [r for r in old_pending if r in live]
-        relocated = any(r not in live for r in old_pending)
-        first_commit = not rels
-        if (
-            not first_commit
-            and n_rows < OBJIDX_INLINE_ROWS
-            and len(carried) + len(new_data) <= OBJIDX_PENDING_MAX
-        ):
-            # skip path: this commit's data files carry their own
-            # (and any relocated) unindexed pairs
-            return staged, fams, carried + new_data
+    def stage_delta():
         # coalesce(1), not repartitionByRange(1, ...): range
         # partitioning into ONE partition still pays a range-bounds
         # sampling job + an extra exchange; coalescing the distinct's
@@ -1010,12 +946,7 @@ def _plan_and_stage(
             .coalesce(1)
             .sortWithinPartitions(OBJ_KEY)
         )
-        irels = Mf.stage_df(delta, base, OBJIDX)
-        fams[OBJIDX] = snap["families"].get(OBJIDX, []) + irels
-        # inline path: the sidecar delta covers the BATCH pairs only;
-        # relocated old-pending rows still need their new files probed
-        pending = carried + (new_data if relocated else [])
-        return staged + irels, fams, pending
+        return Mf.stage_df(delta, base, OBJIDX)
 
     if not key_bucket_affinity and rels:
         # Column-pruned key scan over the full table: any bucket that
@@ -1076,7 +1007,10 @@ def _plan_and_stage(
         )
         if pulse_bounds is not None:
             _validate_batch_stats(base, name, new_rels, buckets, pulse_bounds)
-        return _with_objidx(new_rels, {name: rels + new_rels})
+        return _with_objidx(
+            snap, name, rels, new_rels, {name: rels + new_rels}, n_rows,
+            stage_delta,
+        )
 
     kept = existing.join(F.broadcast(batch_keys), on=keys, how="left_anti")
     merged = kept.select(*prep.columns).unionByName(prep)
@@ -1089,7 +1023,10 @@ def _plan_and_stage(
         # the whole bucket, so only the bucket membership is checkable
         _validate_batch_stats(base, name, new_rels, buckets, None)
     survivors = [r for r in rels if r not in set(touched)]
-    return _with_objidx(new_rels, {name: survivors + new_rels})
+    return _with_objidx(
+        snap, name, rels, new_rels, {name: survivors + new_rels}, n_rows,
+        stage_delta,
+    )
 
 
 def upsert_many(
@@ -1135,6 +1072,75 @@ def upsert_many(
     _adopt_if_legacy(base)
     prepped: dict[str, tuple] = {}
 
+    def spark_prep(name, batch, st):
+        keys = TABLE_KEYS[name]
+        prep = with_bucket(batch.dropDuplicates(keys)).cache()
+        if st is not None:
+            # caller-supplied planning facts: no job
+            return (
+                "spark",
+                prep,
+                prep.select(*keys).distinct(),
+                st.buckets,
+                st.n_rows,
+                (min(st.pulses), max(st.pulses)),
+            )
+        # one job yields both the bucket list and the row count
+        # (sidecar skip-or-batch)
+        bucket_rows = prep.groupBy("pulse_bucket").count().collect()
+        buckets = [r.pulse_bucket for r in bucket_rows]
+        if not buckets:  # empty batch: no merge
+            prep.unpersist()
+            return None
+        return (
+            "spark",
+            prep,
+            prep.select(*keys).distinct(),
+            buckets,
+            sum(r["count"] for r in bucket_rows),
+            None,
+        )
+
+    def place(name, batch):
+        """This table's placement: an ("arrow", ...) prep for the
+        driver, a spark_prep tuple for the cluster, None when empty.
+        A pyarrow.Table batch is already collected — prep it with zero
+        jobs. A DataFrame with declared stats under the row cap is
+        collected outright; without stats it is probed
+        (Mf.probe_arrow) — Catalyst's estimate is Long.Max for local
+        relations and join outputs, i.e. exactly the micro-batches that
+        benefit most, so an estimate gate alone would route them to
+        the cluster for nothing. The probe job costs what the cluster
+        path's planning job cost."""
+        st = (batch_stats or {}).get(name)
+        if st is not None and not st.pulses:
+            return None
+        cols = [f.name for f in TABLE_SCHEMAS[name].fields]
+        if not isinstance(batch, DataFrame):
+            if not key_bucket_affinity:
+                # the widened collision check only the Spark path
+                # implements — convert once (lossless)
+                batch = spark.createDataFrame(batch, TABLE_SCHEMAS[name])
+                return spark_prep(name, batch, st)
+            tbl = batch.select(cols)
+        elif not key_bucket_affinity or (
+            st is not None and st.n_rows > Mf.DRIVER_ROWS
+        ):
+            return spark_prep(name, batch, st)
+        elif st is not None:
+            tbl = batch.select(*cols).toArrow()
+        else:
+            tbl = Mf.probe_arrow(batch.select(*cols))
+            if tbl is None:
+                return spark_prep(name, batch, st)
+        tbl = _prep_arrow_table(tbl.cast(_arrow_schema(name)), name)
+        if tbl is None:
+            return None
+        pns = set(tbl.column("pulse_number").to_pylist())
+        return (
+            "arrow", tbl, sorted({_bucket_of(p) for p in pns}), (min(pns), max(pns)),
+        )
+
     try:
         with Mf.write_intent(base):
             while True:
@@ -1142,138 +1148,65 @@ def upsert_many(
                 families = dict(snap["families"])
                 staged: list[str] = []
 
-                def spark_prep(name, batch, st):
-                    keys = TABLE_KEYS[name]
-                    prep = with_bucket(batch.dropDuplicates(keys)).cache()
-                    if st is not None:
-                        # caller-supplied planning facts: no job
-                        if not st.pulses:
-                            prep.unpersist()
-                            return None
-                        return (
-                            "spark",
-                            prep,
-                            prep.select(*keys).distinct(),
-                            st.buckets,
-                            st.n_rows,
-                            (min(st.pulses), max(st.pulses)),
-                        )
-                    # one job yields both the bucket list and the row
-                    # count (sidecar skip-or-batch)
-                    bucket_rows = prep.groupBy("pulse_bucket").count().collect()
-                    buckets = [r.pulse_bucket for r in bucket_rows]
-                    if not buckets:  # empty batch: no merge
-                        prep.unpersist()
-                        return None
-                    return (
-                        "spark",
-                        prep,
-                        prep.select(*keys).distinct(),
-                        buckets,
-                        sum(r["count"] for r in bucket_rows),
-                        None,
-                    )
-
                 def one(item):
-                    # prep (dedup + cache + bucket collect) is fused
-                    # into the same worker thread as the staging job,
-                    # so a 3-table micro-batch pipelines per table
-                    # instead of paying a prep barrier; retries after
-                    # a CAS conflict reuse the cached prep.
+                    # placement (dedup + cache + bucket collect) is
+                    # fused into the same worker thread as the staging
+                    # job, so a 3-table micro-batch pipelines per table
+                    # instead of paying a prep barrier; retries after a
+                    # CAS conflict reuse the cached prep.
                     name, batch = item
-                    if not isinstance(batch, DataFrame) and not key_bucket_affinity:
-                        # pyarrow input without bucket affinity needs
-                        # the widened collision check only the Spark
-                        # path implements — convert once (lossless)
-                        batch = spark.createDataFrame(
-                            batch, TABLE_SCHEMAS[name]
-                        )
                     if name not in prepped:
-                        st = (batch_stats or {}).get(name)
-                        # Driver-path eligibility. A pyarrow.Table
-                        # batch (the driver-side ingest fast path) is
-                        # already collected — prep it with zero jobs.
-                        # With caller stats the row count is declared;
-                        # without them the batch is PROBED with a
-                        # bounded collect (LIMIT cap+1) — Catalyst's
-                        # estimate is Long.Max for local relations and
-                        # join outputs, i.e. exactly the micro-batches
-                        # that benefit most, so an estimate gate alone
-                        # routes them to the cluster path for nothing.
-                        # The probe job costs what the cluster path's
-                        # planning job cost.
-                        tbl = _TOO_BIG
-                        if not isinstance(batch, DataFrame):
-                            cols = [
-                                f.name for f in TABLE_SCHEMAS[name].fields
-                            ]
-                            tbl = _prep_arrow_table(
-                                batch.select(cols).cast(_arrow_schema(name)),
-                                name,
-                            )
-                        elif key_bucket_affinity and (
-                            st is None or (st.pulses and st.n_rows <= DRIVER_STAGE_ROWS)
-                        ):
-                            tbl = _collect_arrow(
-                                batch, name,
-                                cap=None if st is not None else DRIVER_STAGE_ROWS,
-                            )
-                        if st is not None and not st.pulses:
-                            prepped[name] = None
-                        elif tbl is None:
-                            prepped[name] = None
-                        elif tbl is _TOO_BIG:
-                            prepped[name] = spark_prep(name, batch, st)
-                        else:
-                            pns = set(tbl.column("pulse_number").to_pylist())
-                            prepped[name] = (
-                                "arrow",
-                                tbl,
-                                sorted({_bucket_of(p) for p in pns}),
-                                (min(pns), max(pns)),
-                            )
+                        prepped[name] = place(name, batch)
                     if prepped[name] is None:
                         return name, None
+                    r = None
                     if prepped[name][0] == "arrow":
                         _tag, tbl, buckets, bounds = prepped[name]
                         r = _plan_and_stage_arrow(
                             base, snap, name, tbl, buckets, bounds
                         )
-                        if r is not None:
-                            return name, r
-                        # touched files exceed the driver merge gate:
-                        # switch this table to the Spark path for good
-                        # (the collected pulse set is exact, so the
-                        # planning facts ride along for free)
-                        pns = sorted(set(tbl.column("pulse_number").to_pylist()))
-                        prepped[name] = spark_prep(
-                            name,
-                            spark.createDataFrame(
-                                tbl.drop_columns(["pulse_bucket"]),
-                                TABLE_SCHEMAS[name],
-                            ),
-                            BatchStats(pns, tbl.num_rows),
+                        if r is None:
+                            # touched files exceed the merge cap: switch
+                            # this table to the Spark path for good (the
+                            # collected pulse set is exact, so the
+                            # planning facts ride along for free)
+                            pns = sorted(set(tbl.column("pulse_number").to_pylist()))
+                            prepped[name] = spark_prep(
+                                name,
+                                spark.createDataFrame(
+                                    tbl.drop_columns(["pulse_bucket"]),
+                                    TABLE_SCHEMAS[name],
+                                ),
+                                BatchStats(pns, tbl.num_rows),
+                            )
+                    if r is None:
+                        _tag, prep, bkeys, buckets, n_rows, bounds = prepped[name]
+                        r = _plan_and_stage(
+                            spark, base, snap, name, prep, bkeys, buckets,
+                            key_bucket_affinity, n_rows=n_rows,
+                            pulse_bounds=bounds,
                         )
-                    _tag, prep, bkeys, buckets, n_rows, bounds = prepped[name]
-                    return name, _plan_and_stage(
-                        spark, base, snap, name, prep, bkeys, buckets,
-                        key_bucket_affinity, n_rows=n_rows,
-                        pulse_bounds=bounds,
-                    )
+                    staged.extend(r[0])
+                    return name, r
 
                 items = list(batches.items())
-                if len(items) > 1:
-                    with ThreadPoolExecutor(max_workers=len(items)) as ex:
-                        results = list(ex.map(one, items))
-                else:
-                    results = [one(items[0])]
+                try:
+                    if len(items) > 1:
+                        with ThreadPoolExecutor(max_workers=len(items)) as ex:
+                            results = list(ex.map(one, items))
+                    else:
+                        results = [one(items[0])]
+                except Exception:
+                    # a refused table discarded its own files; the
+                    # others' staged files of this attempt go too
+                    Mf.discard(base, staged)
+                    raise
                 changed = False
                 records_pending: list[str] | None = None
                 for name, r in results:
                     if r is None:
                         continue
-                    new_rels, fam_updates, pending = r
-                    staged.extend(new_rels)
+                    _new_rels, fam_updates, pending = r
                     families.update(fam_updates)
                     if name == "records":
                         records_pending = pending

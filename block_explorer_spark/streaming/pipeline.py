@@ -22,7 +22,9 @@ The same `ingest_batch` drives the non-streaming micro-batch loop
 from __future__ import annotations
 
 import os
+from collections import Counter
 
+from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -34,47 +36,9 @@ from block_explorer_spark.sources import manifest as Mf
 from block_explorer_spark.sources import parquet as pq
 
 
-def pulses_from_raw(raw: DataFrame) -> DataFrame:
-    """Derive pulse rows for a raw batch.
-
-    The gRPC source delivers pulse metadata alongside records — a
-    FullPulse with REAL prev/next chain links
-    (etl/extractor/platform_pulse.go:43-57) — and those links are what
-    the reference stores (SavePulse). The raw schema carries them as
-    nullable columns; when a stand-in source omits them, fall back to
-    the nominal step-10 cadence. Irregular cadences (skipped
-    consensus rounds) therefore ingest with correct links instead of
-    mislabeled nominal ones; chain repair (W2/J2) still covers
-    neighbors that never arrive.
-
-    New pulses start incomplete/non-sequential; the control plane
-    flips the flags (reference does the same on SavePulse).
-    """
-    step = 10
-    return (
-        raw.groupBy("pulse_number")
-        .agg(
-            F.max("timestamp").alias("timestamp"),
-            F.max("prev_pulse_number").alias("__real_prev"),
-            F.max("next_pulse_number").alias("__real_next"),
-        )
-        .withColumn(
-            "prev_pulse_number", F.coalesce(F.col("__real_prev"), F.col("pulse_number") - step)
-        )
-        .withColumn(
-            "next_pulse_number", F.coalesce(F.col("__real_next"), F.col("pulse_number") + step)
-        )
-        .drop("__real_prev", "__real_next")
-        .withColumn("is_complete", F.lit(False))
-        .withColumn("is_sequential", F.lit(False))
-        .withColumn("jet_drop_amount", F.lit(0).cast("long"))
-        .withColumn("record_amount", F.lit(0).cast("long"))
-        .select(*[f.name for f in schemas.PULSES.fields])
-    )
-
-
-def ingest_batch(spark: SparkSession, base: str, raw: DataFrame) -> None:
+def ingest_batch(spark: SparkSession, base: str, raw: DataFrame) -> int:
     """One micro-batch: transform + persist (idempotent, replay-safe).
+    Returns the batch's raw row count.
 
     Raw records dedup EXACT duplicates: an at-least-once source can
     deliver the same record twice within one batch (the reference's
@@ -85,319 +49,219 @@ def ingest_batch(spark: SparkSession, base: str, raw: DataFrame) -> None:
     is over ALL columns, not just the reference: two rows sharing a
     reference but differing in payload are a genuine in-batch fork and
     must reach fork validation, not be collapsed to an arbitrary winner
-    (the reference's C5498 replay is byte-identical only). r11: the
-    dedup rides the chain sort's own (pulse, jet) grouping shuffle
-    (dedupe=True) instead of paying a standalone full-batch exchange —
-    exact duplicates share every column, so they always share a group.
+    (the reference's C5498 replay is byte-identical only). The dedup
+    rides the chain sort's own (pulse, jet) grouping (dedupe=True)
+    instead of paying a standalone full-batch exchange — exact
+    duplicates share every column, so they always share a group.
+
+    Placement (see manifest.DRIVER_ROWS): only the transform branches.
+    A batch that passes the bounded probe is decoded and chain-sorted
+    on the driver by the same per-group function the cluster
+    applyInPandas wraps, and the whole commit costs the probe's ONE
+    Spark job. A larger batch transforms on the cluster. Both hand the
+    same per-(pulse, jet) facts to `_commit_batch`.
     """
-    # r12 driver fast path (guide §1.2/§6): a KB-scale micro-batch's
-    # commit is fixed-cost bound — every Spark job it runs (transform
-    # materialization, per-table collects, probes) is task-launch and
-    # planning overhead over data the driver could hold outright. One
-    # bounded probe collect (LIMIT cap+1, byte backstop) decides the
-    # path: at or under the gate the WHOLE batch — decode, chain sort,
-    # per-pulse facts, jet-drop derivation, staging — runs driver-side
-    # through the same code the cluster path uses (the chain sort is
-    # literally the same function object; decode equivalence is
-    # test-pinned), and the commit costs ONE Spark job total. Above
-    # the gate (backfills, compactions) nothing changes.
-    probe = _probe_arrow(raw)
-    if probe is not None:
-        _ingest_batch_driver(spark, base, probe)
-        return
+    tbl = Mf.probe_arrow(raw)
+    if tbl is not None:
+        records = Tr.transform_pulse_data_pdf(tbl.to_pandas(), dedupe=True)
+        kept = Counter(
+            zip(records["pulse_number"].tolist(), records["jet_id"].tolist())
+        )
+        # int64-exact Arrow aggregation (no pandas nullable-int→float
+        # promotion on the chain-link columns)
+        gb = tbl.group_by(["pulse_number", "jet_id"]).aggregate(
+            [
+                ([], "count_all"),
+                ("timestamp", "max"),
+                ("prev_pulse_number", "max"),
+                ("next_pulse_number", "max"),
+            ]
+        )
+        cols = ("pulse_number", "jet_id", "count_all", "timestamp_max",
+                "prev_pulse_number_max", "next_pulse_number_max")
+        facts = [
+            (pn, jet, n, kept[pn, jet], ts, prev, nxt)
+            for pn, jet, n, ts, prev, nxt in zip(
+                *(gb.column(c).to_pylist() for c in cols)
+            )
+        ]
+        _commit_batch(spark, base, facts, pq._pdf_to_arrow(records, "records"))
+        return tbl.num_rows
     raw = raw.cache()
     records = None
     try:
         records = Tr.transform_pulse_data(raw, dedupe=True).cache()
-        # Materialize the transform once, then run the pulse + record
-        # MERGEs as concurrent Spark jobs (the scheduler interleaves
-        # them; the reference loads through a 200-worker pool,
-        # configuration/configuration.go:126). Safe because each write
-        # targets a different table and each MERGE is idempotent —
-        # partial failure self-heals on replay exactly as in the
-        # sequential order.
-        # ONE job materializes both caches AND yields per-pulse row
-        # counts for raw and transformed records (each union branch
-        # must scan every cached row, so this populates both caches
-        # exactly as count() would, without extra jobs). The counts feed
-        # upsert_many's batch_stats: the per-table bucket lists + row
-        # counts it would otherwise spend one planning job PER TABLE
-        # rediscovering (r11 ingest profile: 3 of the ~12 fixed jobs
-        # per micro-batch), and the pulse bounds that let the merge
-        # zone-prune its collision checks to zero file reads in the
-        # steady all-new-pulses state.
-        #   raw pulses ⊇ records pulses (chain validation drops whole
-        # jet drops): the PULSES batch derives from raw, so its hint
-        # uses the raw-side set; records/jet_drops derive from the
-        # transformed records, so theirs use the records-side set.
-        #   The two sides aggregate through ONE union (not a join):
-        # a join of two aggregates runs ~8 AQE stage-jobs on a
-        # micro-batch (measured: ~0.8 s of a 2.0 s commit); the union
-        # form is a single aggregation query. The same aggregate also
-        # carries the raw side's pulse metadata (max timestamp + real
-        # prev/next chain links), so the 1-row-per-pulse PULSES batch
-        # is built driver-side from the collected rows instead of
-        # running pulses_from_raw as a second aggregation query over
-        # raw at staging time (one whole exchange + its AQE jobs gone;
-        # the batch is bounded by the micro-batch's pulse count, a few
-        # rows, so the local relation is free).
+        # ONE job materializes both caches AND yields the facts: each
+        # union branch must scan every cached row, so this populates
+        # both caches exactly as count() would. The two sides aggregate
+        # through ONE union, not a join: a join of two aggregates runs
+        # ~8 AQE stage-jobs on a micro-batch (measured: ~0.8 s of a
+        # 2.0 s commit); the union form is a single aggregation query.
         nul = F.lit(None).cast("long")
-        per_pulse = (
+        facts = (
             raw.select(
-                "pulse_number", F.lit(0).alias("__is_rec"), "timestamp",
+                "pulse_number", "jet_id", F.lit(1).alias("n_raw"),
+                F.lit(0).alias("n_kept"), "timestamp",
                 "prev_pulse_number", "next_pulse_number",
             )
             .unionByName(
                 records.select(
-                    "pulse_number", F.lit(1).alias("__is_rec"),
-                    nul.alias("timestamp"),
+                    "pulse_number", "jet_id", F.lit(0).alias("n_raw"),
+                    F.lit(1).alias("n_kept"), nul.alias("timestamp"),
                     nul.alias("prev_pulse_number"),
                     nul.alias("next_pulse_number"),
                 )
             )
-            .groupBy("pulse_number")
+            .groupBy("pulse_number", "jet_id")
             .agg(
-                F.count(F.lit(1)).alias("n_all"),
-                F.sum("__is_rec").alias("n_rec"),
-                F.max("timestamp").alias("ts"),
-                F.max("prev_pulse_number").alias("prev"),
-                F.max("next_pulse_number").alias("next"),
+                F.sum("n_raw"), F.sum("n_kept"), F.max("timestamp"),
+                F.max("prev_pulse_number"), F.max("next_pulse_number"),
             )
             .collect()
         )
-        raw_pulses = [
-            r["pulse_number"] for r in per_pulse if r["n_all"] > r["n_rec"]
-        ]
-        touched = [r["pulse_number"] for r in per_pulse if r["n_rec"]]
-        n_records = sum(r["n_rec"] for r in per_pulse)
-        # same derivation as pulses_from_raw (step-10 fallback for
-        # sources that lack real chain links), driver-side
-        step = 10
-        pulses = spark.createDataFrame(
-            [
-                {
-                    "pulse_number": r["pulse_number"],
-                    "prev_pulse_number": (
-                        r["prev"] if r["prev"] is not None
-                        else r["pulse_number"] - step
-                    ),
-                    "next_pulse_number": (
-                        r["next"] if r["next"] is not None
-                        else r["pulse_number"] + step
-                    ),
-                    "is_complete": False,
-                    "is_sequential": False,
-                    "timestamp": r["ts"],
-                    "jet_drop_amount": 0,
-                    "record_amount": 0,
-                }
-                for r in per_pulse
-                if r["n_all"] > r["n_rec"]
-            ],
-            schemas.PULSES,
-        )
-        drops = Tr.jet_drops_from_records(records, pulses)
-        # Counter-correctness probe BEFORE the merges: if any touched
-        # (pulse, jet) drop already exists — a pulse whose records
-        # arrive split across micro-batches — batch-local counts would
-        # overwrite the true totals (upsert is replace-on-key). The
-        # reference increments counters inside its load txn
-        # (storage.go:56-60); the idempotent analog recomputes counts
-        # from the post-merge fact table. The probe reads only the
-        # PRE-EXISTING jet_drops table, so it does not depend on this
-        # batch's merges — and in steady state (all-new pulses, probe
-        # empty) the jet_drops merge keeps its batch-local counts and
-        # runs CONCURRENTLY with the other two, as before.
-        prior = _prior_jet_drops(spark, base, touched)
-        # Round 6: ONE manifest commit for the whole load — pulses,
-        # records and (steady state) jet_drops publish atomically,
-        # matching the reference's single load txn (storage.go:28-82).
-        # upsert_many stages the per-table writes in parallel threads
-        # internally, so this keeps the previous concurrency.
-        batches = {"pulses": pulses, "records": records}
-        stats = {
-            "pulses": pq.BatchStats(raw_pulses, len(raw_pulses)),
-            "records": pq.BatchStats(touched, n_records),
-        }
-        if not prior:
-            batches["jet_drops"] = drops
-            # one row per (pulse, jet): bounded above by the record
-            # count — the bound is only consumed by the records-table
-            # sidecar gate, so an upper bound is safe for jet_drops
-            stats["jet_drops"] = pq.BatchStats(touched, n_records)
-        pq.upsert_many(spark, base, batches, batch_stats=stats)
-        if prior:
-            # Split-pulse path only: recompute counts from the merged
-            # fact table (bucket-pruned to the touched pulses), then
-            # merge jet_drops after the records merge has landed.
-            post = pq.read_table(
-                spark, base, "records",
-                pulse_gte=min(touched), pulse_lte=max(touched),
-            ).filter(F.col("pulse_number").isin(touched))
-            drops = Tr.jet_drops_from_records(post, pulses)
-            pq.upsert(spark, base, "jet_drops", drops)
+        _commit_batch(spark, base, facts, records)
+        return sum(f[2] for f in facts)
     finally:
         raw.unpersist()
         if records is not None:
             records.unpersist()
 
 
-def _probe_arrow(raw: DataFrame):
-    """The bounded driver-path probe: collect at most gate+1 rows
-    (LIMIT bounds what the driver ever holds); None when the batch is
-    over the row/byte gate — or the gate is disabled — and the
-    cluster path must run."""
-    if pq.DRIVER_STAGE_ROWS <= 0:
-        return None
-    tbl = raw.limit(pq.DRIVER_STAGE_ROWS + 1).toArrow()
-    if (
-        tbl.num_rows > pq.DRIVER_STAGE_ROWS
-        or tbl.nbytes > 8 * pq.DRIVER_STAGE_BYTES
-    ):
-        return None
-    return tbl
+def _commit_batch(spark: SparkSession, base: str, facts, records) -> None:
+    """Ingest's tail, shared by both placements. `facts` holds one
+    (pulse_number, jet_id, raw rows, kept rows, max timestamp, max
+    prev_pulse_number, max next_pulse_number) tuple per (pulse, jet) of
+    the raw batch; `records` is the transformed batch (a pyarrow.Table
+    from the driver, a cached DataFrame from the cluster).
 
+    Pulse rows: the source delivers pulse metadata alongside records —
+    a FullPulse with REAL prev/next chain links
+    (etl/extractor/platform_pulse.go:43-57), which is what the
+    reference stores; a stand-in source that omits them falls back to
+    the nominal step-10 cadence. SavePulse on conflict updates only
+    prev, next and timestamp (etl/storage/storage.go:85-94), so a pulse
+    already stored — a replay, or a split pulse's later batch — keeps
+    its flags and counters; a new pulse starts incomplete and
+    non-sequential until the control plane flips them. The pulses
+    batch is a few rows, so it is built driver-side for both
+    placements, as are the jet drops: one per (pulse, jet) that kept
+    records, with the pulse's timestamp (jet_drops_from_records'
+    derivation, from the facts instead of a second pass over records).
 
-def _prior_jet_drops(spark: SparkSession, base: str, touched: list[int]) -> int:
-    """1 if any touched pulse already has jet_drops rows (a pulse whose
-    records arrive split across micro-batches), else 0 — the counter-
-    correctness probe ingest_batch runs BEFORE its merges. r12 (guide
-    §6 data skipping): zone-prune with the manifest's per-file
-    pulse_number stats first — the steady all-new-pulses state proves
-    no overlap from the manifest alone (ZERO file reads, ZERO Spark
-    jobs); surviving candidates under DRIVER_MERGE_BYTES are probed
-    driver-side through pyarrow (stats-less files are conservatively
-    kept by prune_by_stats, so they get read, never skipped); only a
-    big overlap pays the Spark read the old path always paid."""
-    if not touched or not os.path.exists(pq.table_path(base, "jet_drops")):
-        return 0
-    lo, hi = min(touched), max(touched)
-    try:
-        snap = Mf.read(base)
-        rels = snap["families"].get("jet_drops", [])
-        cand = Mf.prune_by_stats(
-            snap, "jet_drops", "pulse_number", lo=lo, hi=hi, rels=rels
-        )
-        if not cand:
-            return 0
-        if pq._rels_bytes(base, cand) <= pq.DRIVER_MERGE_BYTES:
-            import pyarrow.parquet as papq
-
-            tset = set(touched)
-            for rel in cand:
-                col = papq.read_table(
-                    os.path.join(base, rel), columns=["pulse_number"]
-                ).column("pulse_number")
-                if any(p in tset for p in col.to_pylist()):
-                    return 1
-            return 0
-    except Exception:
-        pass  # unreadable manifest (legacy/adopted layout): ask Spark
-    try:
-        return (
-            pq.read_table(
-                spark, base, "jet_drops", pulse_gte=lo, pulse_lte=hi
-            )
-            .filter(F.col("pulse_number").isin(touched))
-            .limit(1)
-            .count()
-        )
-    except Exception:
-        return 0  # unreadable/empty dir: first batch ever
-
-
-def _ingest_batch_driver(spark: SparkSession, base: str, raw_tbl) -> None:
-    """ingest_batch's driver fast path over one collected Arrow batch:
-    the same decode → dedupe → chain-sort → per-pulse facts →
-    jet-drop derivation → atomic 3-table upsert, with every step that
-    the cluster path runs as a Spark job executed driver-side instead.
-    The chain sort runs the IDENTICAL function object the cluster
-    applyInPandas wraps (chain_sort.make_sort_group); decode
-    equivalence is pinned by test_driver_ingest. Planning facts
-    (pulse sets, row counts) come from the collected rows, so the
-    BatchStats are exact by construction, and staging goes through
-    upsert_many's pyarrow path — ONE Spark job (the caller's probe
-    collect) per micro-batch commit in the steady state."""
+    Counters: if a touched (pulse, jet) drop already exists — a pulse
+    whose records arrive split across micro-batches — batch-local
+    counts would overwrite the true totals (upsert is replace-on-key).
+    The reference increments counters inside its load txn
+    (storage.go:56-60); the idempotent analog recomputes them from the
+    post-merge fact table. In the steady state (all-new pulses) the
+    jet drops ride the ONE manifest commit with pulses and records,
+    matching the reference's single load txn (storage.go:28-82)."""
     import pyarrow as pa
 
-    raw_pdf = raw_tbl.to_pandas()
-    records_pdf = Tr.transform_pulse_data_pdf(raw_pdf, dedupe=True)
-
-    # per-pulse raw facts through Arrow group_by (int64-exact — no
-    # pandas nullable-int→float promotion on the chain-link columns)
-    gb = raw_tbl.group_by("pulse_number").aggregate(
-        [
-            ("timestamp", "max"),
-            ("prev_pulse_number", "max"),
-            ("next_pulse_number", "max"),
-        ]
-    )
-    # same derivation as pulses_from_raw (step-10 fallback for sources
-    # that lack real chain links) — mirrors the cluster path above
+    if not facts:
+        return
     step = 10
-    pulse_rows = [
-        {
+    links: dict[int, list] = {}
+    for pn, _jet, _n, _k, *link in facts:
+        links.setdefault(pn, []).append(link)
+    snap = Mf.read(base)
+    prior_pulses = {
+        r[0]: r[1:]
+        for r in _stored_rows(
+            spark, base, snap, "pulses", list(links),
+            ["pulse_number", "is_complete", "is_sequential",
+             "jet_drop_amount", "record_amount"],
+        )
+    }
+    pulse_rows = []
+    for pn, per_jet in links.items():
+        ts, prev, nxt = (
+            max((v for v in col if v is not None), default=None)
+            for col in zip(*per_jet)
+        )
+        done, seq, n_drops, n_recs = prior_pulses.get(pn, (False, False, 0, 0))
+        pulse_rows.append({
             "pulse_number": pn,
             "prev_pulse_number": prev if prev is not None else pn - step,
             "next_pulse_number": nxt if nxt is not None else pn + step,
-            "is_complete": False,
-            "is_sequential": False,
+            "is_complete": done,
+            "is_sequential": seq,
             "timestamp": ts,
-            "jet_drop_amount": 0,
-            "record_amount": 0,
-        }
-        for pn, ts, prev, nxt in zip(
-            gb.column("pulse_number").to_pylist(),
-            gb.column("timestamp_max").to_pylist(),
-            gb.column("prev_pulse_number_max").to_pylist(),
-            gb.column("next_pulse_number_max").to_pylist(),
-        )
+            "jet_drop_amount": n_drops,
+            "record_amount": n_recs,
+        })
+    pulses = pa.Table.from_pylist(pulse_rows, schema=pq._arrow_schema("pulses"))
+    ts_of = {r["pulse_number"]: r["timestamp"] for r in pulse_rows}
+    drop_rows = [
+        {"pulse_number": pn, "jet_id": jet, "record_amount": k, "timestamp": ts_of[pn]}
+        for pn, jet, _n, k, *_ in facts
+        if k
     ]
-    raw_pulses = [r["pulse_number"] for r in pulse_rows]
-    pulses_tbl = pa.Table.from_pylist(pulse_rows, schema=pq._arrow_schema("pulses"))
-
-    n_records = len(records_pdf)
-    touched = (
-        sorted(int(p) for p in records_pdf["pulse_number"].unique())
-        if n_records
-        else []
-    )
-    records_tbl = pq._pdf_to_arrow(records_pdf, "records")
-
-    prior = _prior_jet_drops(spark, base, touched)
-
-    batches: dict = {"pulses": pulses_tbl, "records": records_tbl}
+    touched = sorted({r["pulse_number"] for r in drop_rows})
+    n_records = sum(r["record_amount"] for r in drop_rows)
+    prior = _stored_rows(spark, base, snap, "jet_drops", touched, ["pulse_number"])
+    batches = {"pulses": pulses, "records": records}
     stats = {
-        "pulses": pq.BatchStats(raw_pulses, len(raw_pulses)),
+        "pulses": pq.BatchStats(list(links), len(links)),
         "records": pq.BatchStats(touched, n_records),
     }
-    if not prior and n_records:
-        # driver twin of jet_drops_from_records: one row per
-        # (pulse, jet) with the batch pulse's timestamp
-        ts_by_pulse = {r["pulse_number"]: r["timestamp"] for r in pulse_rows}
-        counts = (
-            records_pdf.groupby(["pulse_number", "jet_id"], sort=False)
-            .size()
-            .reset_index(name="record_amount")
+    if not prior:
+        batches["jet_drops"] = pa.Table.from_pylist(
+            drop_rows, schema=pq._arrow_schema("jet_drops")
         )
-        for c in ("first_prev_hash", "second_prev_hash", "hash", "raw_data"):
-            counts[c] = None
-        counts["timestamp"] = [
-            ts_by_pulse.get(int(p)) for p in counts["pulse_number"]
-        ]
-        batches["jet_drops"] = pq._pdf_to_arrow(counts, "jet_drops")
-        stats["jet_drops"] = pq.BatchStats(touched, n_records)
+        stats["jet_drops"] = pq.BatchStats(touched, len(drop_rows))
     pq.upsert_many(spark, base, batches, batch_stats=stats)
     if prior:
-        # Split-pulse path only (rare): recompute counts from the
-        # merged fact table, exactly like the cluster path.
+        # Split-pulse path only: recompute counts from the merged fact
+        # table (bucket-pruned to the touched pulses), then merge
+        # jet_drops after the records merge has landed.
         post = pq.read_table(
             spark, base, "records",
             pulse_gte=min(touched), pulse_lte=max(touched),
         ).filter(F.col("pulse_number").isin(touched))
-        pulses_df = spark.createDataFrame(pulses_tbl, schemas.PULSES)
-        drops = Tr.jet_drops_from_records(post, pulses_df)
-        pq.upsert(spark, base, "jet_drops", drops)
+        pulses_df = spark.createDataFrame(pulses, schemas.PULSES)
+        pq.upsert(spark, base, "jet_drops", Tr.jet_drops_from_records(post, pulses_df))
+
+
+def _stored_rows(
+    spark: SparkSession, base: str, snap: dict, name: str,
+    pulses: list[int], cols: list[str],
+) -> list[tuple]:
+    """`cols` (pulse_number first) of the committed `name` rows whose
+    pulse is in `pulses`. Zone-pruned with the snapshot's per-file
+    pulse_number stats first, so the steady all-new-pulses state
+    proves no overlap from the manifest alone (no file read, no Spark
+    job); surviving files under the merge cap are read through pyarrow
+    (stats-less files are conservatively kept by prune_by_stats, so
+    they get read, never skipped). A bigger overlap, an unreadable
+    file, and a version-0 store — legacy files no manifest lists yet —
+    read through Spark."""
+    import pyarrow.parquet as papq
+
+    if not pulses or not os.path.exists(pq.table_path(base, name)):
+        return []
+    want = set(pulses)
+    lo, hi = min(pulses), max(pulses)
+    if snap["version"]:
+        rels = Mf.prune_by_stats(snap, name, "pulse_number", lo=lo, hi=hi)
+        if pq._rels_bytes(base, rels) <= Mf.DRIVER_MERGE_BYTES:
+            try:
+                out = []
+                for rel in rels:
+                    t = papq.read_table(os.path.join(base, rel), columns=cols)
+                    out += [
+                        row
+                        for row in zip(*(t.column(c).to_pylist() for c in cols))
+                        if row[0] in want
+                    ]
+                return out
+            except (OSError, ValueError):
+                pass  # unreadable file: the Spark read below decides
+    df = pq.read_table(spark, base, name, pulse_gte=lo, pulse_lte=hi)
+    return [
+        tuple(r)
+        for r in df.filter(F.col("pulse_number").isin(pulses)).select(*cols).collect()
+    ]
 
 
 def run_control_pass(spark: SparkSession, base: str) -> dict:
@@ -453,7 +317,7 @@ def run_control_pass(spark: SparkSession, base: str) -> dict:
 
 def _control_pass_driver(spark: SparkSession, base: str) -> dict | None:
     """run_control_pass's driver fast path: when BOTH control tables'
-    committed bytes fit under DRIVER_MERGE_BYTES, read them through
+    committed bytes fit under Mf.DRIVER_MERGE_BYTES, read them through
     pyarrow and run the sweep driver-side — the completeness check is
     the same pure `trie_covered`, the D5 advance the same
     `_sequential_walk`, the gap scan `_gaps_walk` (pinned equivalent
@@ -470,7 +334,7 @@ def _control_pass_driver(spark: SparkSession, base: str) -> dict | None:
             return None  # legacy or empty-under-protocol: Spark decides
         prels = snap["families"].get("pulses", [])
         drels = snap["families"].get("jet_drops", [])
-        if pq._rels_bytes(base, prels + drels) > pq.DRIVER_MERGE_BYTES:
+        if pq._rels_bytes(base, prels + drels) > Mf.DRIVER_MERGE_BYTES:
             return None
 
         def rd(name, rels):
@@ -555,20 +419,12 @@ def flush_pending(spark: SparkSession, base: str, checkpoint_dir: str) -> int:
     spool = _spool_dir(checkpoint_dir)
     if not os.path.isdir(spool):
         return 0
-    # r12: ONE bounded read decides the path and yields the count —
-    # the standalone count() job re-read the same spool the ingest
-    # probe collects right after (guide §1.2: one pass, not two).
     try:
         raw = spark.read.schema(schemas.RAW_RECORDS).parquet(spool)
-        probe = _probe_arrow(raw)
-        n = probe.num_rows if probe is not None else raw.count()
-    except Exception:
-        probe, n = None, 0  # spool dir exists but holds no readable parquet
+    except AnalysisException:
+        raw = None  # spool dir exists but holds no readable parquet
+    n = ingest_batch(spark, base, raw) if raw is not None else 0
     if n:
-        if probe is not None:
-            _ingest_batch_driver(spark, base, probe)
-        else:
-            ingest_batch(spark, base, raw)
         run_control_pass(spark, base)
     shutil.rmtree(spool, ignore_errors=True)
     return n

@@ -1,8 +1,9 @@
-"""r12 driver-side micro-batch ingest (streaming/pipeline.py): a raw
-batch at or under pq.DRIVER_STAGE_ROWS runs decode + chain sort +
-per-pulse planning + staging entirely on the driver (ONE Spark job —
-the probe collect), through the SAME chain-sort function object the
-cluster applyInPandas wraps. These tests pin:
+"""Driver-side micro-batch ingest (streaming/pipeline.py): a raw batch
+that passes manifest.probe_arrow (at or under Mf.DRIVER_ROWS) runs
+decode + chain sort + per-pulse planning + staging entirely on the
+driver (ONE Spark job — the probe collect), through the SAME
+chain-sort function object the cluster applyInPandas wraps. These
+tests pin:
 
 (a) decode equivalence: _decode_pandas == decode_records row-for-row;
 (b) whole-path equivalence: driver vs cluster ingest of a batch mixing
@@ -12,7 +13,10 @@ cluster applyInPandas wraps. These tests pin:
     merged fact table on the driver path too;
 (d) replay idempotency on the driver path;
 (e) the zone-pruned prior probe: no overlap → jet_drops ride the main
-    commit; overlap → recount (covered by (c)).
+    commit; overlap → recount (covered by (c));
+(f) SavePulse semantics: a replayed pulse keeps its flags and counters;
+(g) a version-0 (pre-manifest) store's jet drops count as prior;
+(h) the Spark job census of one commit and one control pass.
 """
 
 from __future__ import annotations
@@ -21,6 +25,7 @@ import pytest
 
 from block_explorer_spark import schemas
 from block_explorer_spark.plans import transformer as Tr
+from block_explorer_spark.sources import manifest as Mf
 from block_explorer_spark.sources import parquet as pq
 from block_explorer_spark.streaming import pipeline as P
 
@@ -104,10 +109,10 @@ def test_driver_and_cluster_ingest_identical(spark, tmp_path, monkeypatch):
     d_drv = str(tmp_path / "drv")
     d_clu = str(tmp_path / "clu")
 
-    assert pq.DRIVER_STAGE_ROWS >= len(rows)  # default gate takes the driver path
+    assert Mf.DRIVER_ROWS >= len(rows)  # default gate takes the driver path
     P.ingest_batch(spark, d_drv, spark.createDataFrame(rows, schemas.RAW_RECORDS))
 
-    monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", 0)  # force the cluster path
+    monkeypatch.setattr(Mf, "DRIVER_ROWS", 0)  # force the cluster path
     P.ingest_batch(spark, d_clu, spark.createDataFrame(rows, schemas.RAW_RECORDS))
     monkeypatch.undo()
 
@@ -166,8 +171,8 @@ def test_control_pass_driver_matches_spark(spark, tmp_path, monkeypatch):
         return out1, out2, _table_rows(spark, base, "pulses")
 
     drv = build(tmp_path / "drv")
-    monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", 0)   # cluster ingest
-    monkeypatch.setattr(pq, "DRIVER_MERGE_BYTES", 0)  # cluster control pass
+    monkeypatch.setattr(Mf, "DRIVER_ROWS", 0)   # cluster ingest
+    monkeypatch.setattr(Mf, "DRIVER_MERGE_BYTES", 0)  # cluster control pass
     clu = build(tmp_path / "clu")
     monkeypatch.undo()
 
@@ -190,7 +195,7 @@ def test_split_pulse_recounts_after_merge(spark, tmp_path, monkeypatch, force_cl
     with jet-drop counts covering the MERGED fact table (prior>0
     path), identically on both paths."""
     if force_cluster:
-        monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", 0)
+        monkeypatch.setattr(Mf, "DRIVER_ROWS", 0)
     base = str(tmp_path / ("c" if force_cluster else "d"))
     p = 4_100_010
     b1 = [_rr(30 + i, "activate", p, "0", i + 1, obj=bytes([i]) * 8, prev=None) for i in range(3)]
@@ -200,3 +205,98 @@ def test_split_pulse_recounts_after_merge(spark, tmp_path, monkeypatch, force_cl
     drops = pq.read_table(spark, base, "jet_drops").collect()
     assert len(drops) == 1
     assert drops[0].record_amount == 5
+
+
+def _pulse_state(spark, base):
+    return {
+        r.pulse_number: (r.is_complete, r.is_sequential, r.jet_drop_amount, r.record_amount)
+        for r in pq.read_table(spark, base, "pulses").collect()
+    }
+
+
+@pytest.mark.parametrize("force_cluster", [False, True])
+def test_replayed_pulse_keeps_flags_and_counters(spark, tmp_path, monkeypatch, force_cluster):
+    """SavePulse on conflict updates only prev, next and timestamp
+    (etl/storage/storage.go:85-94): replaying a batch of an already
+    sequential pulse must not reset its flags or counters — the
+    control pass never re-sequences a pulse below the frontier."""
+    if force_cluster:
+        monkeypatch.setattr(Mf, "DRIVER_ROWS", 0)
+    base = str(tmp_path / "s")
+    p = 4_200_010
+    batches = [
+        [_rr(300 + 10 * k + i, "activate", p + 10 * k, "", i + 1,
+             obj=bytes([k, i]) * 4, prev=None) for i in range(k + 2)]
+        for k in range(3)
+    ]
+    for rows in batches:
+        P.ingest_batch(spark, base, spark.createDataFrame(rows, schemas.RAW_RECORDS))
+    for _ in range(3):
+        P.run_control_pass(spark, base)
+    before = _pulse_state(spark, base)
+    assert before == {
+        p + 10 * k: (True, True, 1, k + 2) for k in range(3)
+    }
+    P.ingest_batch(spark, base, spark.createDataFrame(batches[0], schemas.RAW_RECORDS))
+    P.run_control_pass(spark, base)
+    assert _pulse_state(spark, base) == before
+
+
+def test_legacy_store_split_pulse_counts_prior_drops(spark, tmp_path):
+    """A version-0 store (tables written by direct .parquet() writes,
+    no manifest) already holding a pulse's jet drop: the next batch of
+    that pulse must recount from the merged records, not overwrite the
+    stored count with the batch-local one."""
+    import os
+
+    base = str(tmp_path / "legacy")
+    p = 4_300_010
+    old = [_rr(500 + i, "activate", p, "0", i + 1, obj=bytes([i]) * 8, prev=None) for i in range(3)]
+    recs = Tr.transform_pulse_data(spark.createDataFrame(old, schemas.RAW_RECORDS))
+    drops = Tr.jet_drops_from_records(
+        recs, spark.createDataFrame([(p, 1_700_000_000 + p)], "pulse_number long, timestamp long")
+    )
+    for name, df in (("records", recs), ("jet_drops", drops)):
+        pq.with_bucket(df).write.partitionBy("pulse_bucket").parquet(os.path.join(base, name))
+    assert Mf.current_version(base) == 0
+
+    new = [_rr(600 + i, "activate", p, "0", i + 1, obj=bytes([64 + i]) * 8, prev=None) for i in range(2)]
+    P.ingest_batch(spark, base, spark.createDataFrame(new, schemas.RAW_RECORDS))
+    drops = pq.read_table(spark, base, "jet_drops").collect()
+    assert [(r.pulse_number, r.jet_id, r.record_amount) for r in drops] == [(p, "0", 5)]
+
+
+def _jobs(spark, fn):
+    """Spark jobs launched by fn() (the status tracker works with the
+    UI off)."""
+    tracker = spark.sparkContext.statusTracker()
+    j0 = max(tracker.getJobIdsForGroup(None), default=-1)
+    fn()
+    return max(tracker.getJobIdsForGroup(None), default=-1) - j0
+
+
+def test_spark_job_census_per_commit(spark, tmp_path, monkeypatch):
+    """The driver placement's job budget: a KB micro-batch commit into a
+    non-empty store costs at most the probe's one job, and the control
+    pass none. Forcing the cluster path (row cap 0) must cost more —
+    otherwise the equivalence tests above would compare the driver
+    path with itself."""
+    p = 4_400_010
+
+    def batch(k):
+        rows = [_rr(700 + 10 * k + i, "activate", p + 10 * k, "", i + 1,
+                    obj=bytes([k, i]) * 4, prev=None) for i in range(4)]
+        return spark.createDataFrame(rows, schemas.RAW_RECORDS)
+
+    base = str(tmp_path / "drv")
+    P.ingest_batch(spark, base, batch(0))
+    P.run_control_pass(spark, base)
+    b1 = batch(1)
+    assert _jobs(spark, lambda: P.ingest_batch(spark, base, b1)) <= 1
+    assert _jobs(spark, lambda: P.run_control_pass(spark, base)) == 0
+
+    monkeypatch.setattr(Mf, "DRIVER_ROWS", 0)
+    base = str(tmp_path / "clu")
+    P.ingest_batch(spark, base, batch(0))
+    b1 = batch(1)
+    assert _jobs(spark, lambda: P.ingest_batch(spark, base, b1)) > 1

@@ -1,5 +1,5 @@
-"""r12 driver-side staging path (sources/parquet.py): a micro-batch at
-or below DRIVER_STAGE_ROWS stages through pyarrow on the driver (no
+"""Driver-side staging path (sources/parquet.py): a micro-batch at or
+below Mf.DRIVER_ROWS stages through pyarrow on the driver (no
 per-table Spark write job) — same files, same layout, same manifest
 protocol. These tests pin (a) path equivalence driver vs cluster,
 (b) the BatchStats exactness contract (now ENFORCED, not just
@@ -73,8 +73,7 @@ def test_driver_and_cluster_paths_produce_identical_tables(spark, tmp_path, monk
     identically — table rows, lifeline reads, and zone-map pruning."""
     bases = {}
     for mode, gate in (("driver", 1 << 20), ("cluster", 0)):
-        monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", gate)
-        monkeypatch.setattr(pq, "DRIVER_STAGE_BYTES", gate * 1024)
+        monkeypatch.setattr(Mf, "DRIVER_ROWS", gate)
         base = str(tmp_path / mode)
         _upsert_all(spark, base, 1500, 40)
         _upsert_all(spark, base, 2600, 25)
@@ -118,7 +117,7 @@ def test_understated_batch_stats_refused_before_commit(spark, tmp_path, monkeypa
     """BatchStats' pulse set is load-bearing (bucket list = rewrite
     set; bounds = collision zone-prune). An under-approximated set on
     the cluster path must be refused BEFORE the commit publishes."""
-    monkeypatch.setattr(pq, "DRIVER_STAGE_ROWS", 0)  # force cluster path
+    monkeypatch.setattr(Mf, "DRIVER_ROWS", 0)  # force cluster path
     base = str(tmp_path / "w")
     batch = spark.createDataFrame(
         _records_rows(1500, 5) + _records_rows(2600, 5), schemas.RECORDS
@@ -128,8 +127,9 @@ def test_understated_batch_stats_refused_before_commit(spark, tmp_path, monkeypa
             spark, base, {"records": batch},
             batch_stats={"records": pq.BatchStats([1500], 10)},  # missing 2600
         )
-    # nothing published
+    # nothing published, and the refused attempt left no staged file
     assert Mf.read(base)["families"].get("records", []) == []
+    assert Mf.unmanifested_files(base, ["records"]) == {}
 
 
 def test_understated_batch_stats_harmless_on_driver_path(spark, tmp_path):
